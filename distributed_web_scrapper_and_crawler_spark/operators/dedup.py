@@ -274,15 +274,19 @@ def minhash_table(
         # on open-vocabulary corpora
         vocab = sh.select("shingle").distinct().limit(vocab_cap + 1).localCheckpoint()
         if vocab.count() <= vocab_cap:
+            # concat_ws + null-safe join: a NULL-text doc's one NULL
+            # shingle hashes to the seed-only value, exactly as the
+            # inline path's concat_ws does (an inner equi-join would
+            # drop the doc)
             htbl = vocab.select(
-                "shingle",
+                F.col("shingle").alias("_v"),
                 *[
-                    md5_long(F.concat(F.lit(f"{h}#"), F.col("shingle"))).alias(f"_h{h}")
+                    md5_long(F.concat_ws("#", F.lit(str(h)), F.col("shingle"))).alias(f"_h{h}")
                     for h in range(n_hashes)
                 ],
             )
             mins = (
-                sh.join(F.broadcast(htbl), "shingle")
+                sh.join(F.broadcast(htbl), F.col("shingle").eqNullSafe(F.col("_v")))
                 .groupBy("id")
                 .agg(*[F.min(f"_h{h}").alias(f"_s{h}") for h in range(n_hashes)])
             )

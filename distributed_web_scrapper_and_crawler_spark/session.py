@@ -93,11 +93,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        # shuffle/spill codec (guide §2.3): measurable A/B knob — the crawl
-        # phases are memory-bandwidth-bound (BENCH.md round-6 root cause),
-        # so a denser codec can trade spare CPU for fewer bytes through
-        # the memory system. Default stays lz4 unless measured otherwise.
-        .config("spark.io.compression.codec", os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # JVM helper-thread sizing for core-pinned runs: a real N-core

@@ -291,12 +291,14 @@ def test_minhash_vocab_path_equals_inline_path(spark):
             (2, "the quick brown fox jumps over the lazy cat"),
             (7, "completely different text with its own shingles"),
             (9, "zz"),  # shorter than the gram => single short shingle
+            (11, None),  # NULL text => one NULL shingle, seed-only signature
         ],
     )
     via_vocab = dedup.minhash_table(
         df, "doc_id", "text", n_hashes=8, ngram=8, vocab_cap=10_000, vocab_min_bytes=0
     )
     inline = dedup.minhash_table(df, "doc_id", "text", n_hashes=8, ngram=8, vocab_cap=None)
+    assert {r["id"] for r in inline.collect()} == {1, 2, 7, 9, 11}
     assert sorted(map(tuple, via_vocab.collect())) == sorted(map(tuple, inline.collect()))
     # a cap below the true vocabulary falls back to the inline path
     fallback = dedup.minhash_table(
@@ -306,6 +308,16 @@ def test_minhash_vocab_path_equals_inline_path(spark):
     # below the size gate the probe is skipped entirely (inline shape)
     gated = dedup.minhash_table(df, "doc_id", "text", n_hashes=8, ngram=8)
     assert sorted(map(tuple, gated.collect())) == sorted(map(tuple, inline.collect()))
+
+
+def test_plan_size_bytes_estimates_parquet_scan(spark, tmp_path):
+    """_plan_size_bytes reads Catalyst's estimate through a private API;
+    a break there would return the 1 << 60 failure sentinel and silently
+    push every corpus onto the vocabulary-probe shape."""
+    path = str(tmp_path / "docs.parquet")
+    _docs(spark, [(i, f"document number {i} text") for i in range(50)]).write.parquet(path)
+    est = dedup._plan_size_bytes(spark.read.parquet(path))
+    assert 0 < est < 1 << 60
 
 
 def test_lsh_band_union_matches_distinct_reference(spark):

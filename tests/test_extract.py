@@ -1,16 +1,14 @@
 """Link/field extraction semantics: the 3 selector families, depth deltas,
-urljoin, offset ordering, media exclusion, and fused == unfused."""
+urljoin + canonicalization, offset ordering and media exclusion."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from distributed_web_scrapper_and_crawler_spark.config import DEFAULT_EXTRACTION_RULES
-from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import normalize_url_py
 from distributed_web_scrapper_and_crawler_spark.operators.extract import (
     extract_fields_udf,
-    extract_links_canon_udf,
-    extract_links_udf,
+    extract_links,
     spans_sorted,
 )
 from distributed_web_scrapper_and_crawler_spark.sources.corpus import CORPUS_SPARK_SCHEMA
@@ -36,77 +34,39 @@ def _df(spark):
 
 
 def test_three_families_and_depth_deltas(spark):
-    rows = (
-        _df(spark)
-        .select(F.explode(extract_links_udf()(F.col("doc_id"), F.col("spans"))).alias("l"))
-        .select("l.*")
-        .collect()
+    """The production links path (extract_links, run by plans/round.py):
+    offset order, pos rank, per-family depth delta, urljoin +
+    canonicalization, media exclusion — in both modes."""
+    fetched = _df(spark).select(
+        F.lit(11).cast("long").alias("seq"),
+        F.lit(2).alias("depth"),
+        F.col("doc_id").alias("url"),
+        "spans",
     )
     # offset order: link_next(10) pos0, link_book(30) pos1, link_cat(40) pos2
-    got = [(r["url"], r["depth_delta"], r["pos"]) for r in rows]
-    assert got == [
-        ("http://h.example.test/page/2", 0, 0),  # pagination: same depth (remote_worker.py:236)
-        ("http://h.example.test/page/2?b=2&a=1#f", 1, 1),  # book: depth+1 (:220), urljoin'd
-        ("http://h.example.test/cat/3", 0, 2),  # category: same depth (:252)
-    ]
-    # media span NOT emitted (reference never fetches images)
-    assert len(rows) == 3
-
-
-def test_fused_equals_unfused_plus_normalize(spark):
-    unfused = (
-        _df(spark)
-        .select(F.explode(extract_links_udf()(F.col("doc_id"), F.col("spans"))).alias("l"))
-        .select("l.url", "l.depth_delta", "l.pos")
-        .collect()
-    )
-    fused = (
-        _df(spark)
-        .select(F.explode(extract_links_canon_udf(parity=True)(F.col("doc_id"), F.col("spans"))).alias("l"))
-        .select("l.url", "l.depth_delta", "l.pos", "l.host", "l.path")
-        .collect()
-    )
-    assert [(normalize_url_py(r["url"]), r["depth_delta"], r["pos"]) for r in unfused] == [
-        (r["url"], r["depth_delta"], r["pos"]) for r in fused
-    ]
-    assert all(r["host"] == "h.example.test" for r in fused)
-    assert fused[2]["path"] == "/cat/3"
-
-
-def test_flat_link_path_equals_fused(spark):
-    """The round plan's flat link path (JVM filter+array_sort+posexplode +
-    vectorized (base, href) canonicalize, plans/round.py) must emit exactly
-    what the fused array<struct> UDF emits — url, host, path, depth delta
-    and pos — in both modes."""
-    from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import (
-        canon_links_flat_udf,
-    )
-
+    book = {
+        True: "http://h.example.test/page/2",  # parity drops query + fragment
+        False: "http://h.example.test/page/2?a=1&b=2",  # params sorted, fragment stripped
+    }
     for parity in (True, False):
-        fused = (
-            _df(spark)
-            .select(
-                F.explode(extract_links_canon_udf(parity=parity)(F.col("doc_id"), F.col("spans"))).alias("l")
-            )
-            .select("l.url", "l.host", "l.path", "l.depth_delta", "l.pos")
-            .collect()
-        )
-        link_spans = F.expr(
-            "array_sort(filter(spans, s -> s.kind IN ('link_book', 'link_next', 'link_cat')),"
-            " (a, b) -> CASE WHEN a.offset < b.offset THEN -1 WHEN a.offset > b.offset THEN 1 ELSE 0 END)"
-        )
-        flat = (
-            _df(spark)
-            .select(F.col("doc_id").alias("_base"), F.posexplode(link_spans).alias("pos", "_sp"))
-            .select(
-                canon_links_flat_udf(parity=parity)(F.col("_base"), F.col("_sp.text")).alias("_l"),
-                F.when(F.col("_sp.kind") == "link_book", F.lit(1)).otherwise(F.lit(0)).alias("depth_delta"),
-                F.col("pos").cast("int").alias("pos"),
-            )
-            .select("_l.url", "_l.host", "_l.path", "depth_delta", "pos")
-            .collect()
-        )
-        assert [tuple(r) for r in flat] == [tuple(r) for r in fused], f"parity={parity}"
+        rows = extract_links(fetched, parity, need_path=True).orderBy("pos").collect()
+        got = [(r["parent_seq"], r["url"], r["host"], r["path"], r["depth"], r["pos"]) for r in rows]
+        assert got == [
+            # pagination: same depth (remote_worker.py:236)
+            (11, "http://h.example.test/page/2", "h.example.test", "/page/2", 2, 0),
+            # book: depth+1 (:220), urljoin'd against the page url
+            (11, book[parity], "h.example.test", "/page/2", 3, 1),
+            # category: same depth (:252)
+            (11, "http://h.example.test/cat/3", "h.example.test", "/cat/3", 2, 2),
+        ], f"parity={parity}"
+        # media span NOT emitted (reference never fetches images)
+        assert len(rows) == 3
+        # without robots enforcement the path column is never computed
+        no_path = extract_links(fetched, parity, need_path=False)
+        assert "path" not in no_path.columns
+        assert [tuple(r) for r in no_path.orderBy("pos").collect()] == [
+            (seq, depth, pos, url, host) for seq, url, host, _, depth, pos in got
+        ]
 
 
 def test_field_extraction_first_match_and_strip(spark):

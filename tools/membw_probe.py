@@ -1,10 +1,10 @@
 """Memory-bandwidth ceiling probe for the sandbox box.
 
 The crawl's 2-vs-8-core scaling pair reads ~0.63 while per-phase CPU
-sampling (tools/phase_diag.py) shows ~7.6 of 8 cores busy with CPU-seconds
+sampling showed ~7.6 of 8 cores busy with CPU-seconds
 inflated ~2.3x vs the 2-core run — the signature of memory-stall cycles,
 not idle cores. This probe measures the machine's aggregate copy/triad
-bandwidth at 1/2/4/8/16 pinned processes: if aggregate GB/s saturates
+bandwidth at 1/2/4/8/16 pinned processes (those the affinity mask holds): if aggregate GB/s saturates
 well below 8 cores, an N-vs-4N single-box pair under-reads the efficiency
 a real cluster (4x memory channels at 4x executors) would show.
 
@@ -48,13 +48,14 @@ def _steal() -> int:
 def run_level(n_procs: int) -> tuple[float, int]:
     q = mp.Queue()
     s0 = _steal()
-    # clamp pin targets to the actual affinity mask (ADVICE r6 low: a cpu
+    # pin targets come from the actual affinity mask (ADVICE r6 low: a cpu
     # id beyond the mask makes sched_setaffinity raise in the worker, and
-    # a bare q.get() would then block forever)
+    # a bare q.get() would then block forever); more workers than cpus
+    # would share cores and under-read per-core bandwidth, so refuse
     avail = sorted(os.sched_getaffinity(0))
-    procs = [
-        mp.Process(target=worker, args=(avail[i % len(avail)], q)) for i in range(n_procs)
-    ]
+    if n_procs > len(avail):
+        raise ValueError(f"membw level {n_procs} exceeds the {len(avail)} cpus in the affinity mask")
+    procs = [mp.Process(target=worker, args=(avail[i], q)) for i in range(n_procs)]
     for p in procs:
         p.start()
     rates = []
@@ -73,7 +74,8 @@ def run_level(n_procs: int) -> tuple[float, int]:
 def main() -> None:
     import sys
 
-    levels = [int(x) for x in sys.argv[1:]] or [1, 2, 4, 8, 16]
+    n_cpus = len(os.sched_getaffinity(0))
+    levels = [int(x) for x in sys.argv[1:]] or [n for n in (1, 2, 4, 8, 16) if n <= n_cpus]
     out, steal = {}, {}
     for n in levels:
         rate, ticks = run_level(n)
